@@ -1,9 +1,11 @@
 """The generic MapReduce client API run through the correctness gate.
 
-These queries execute real MapReduceClient jobs (core/client.py) via the
-mapInPandas -> groupBy().applyInPandas pipeline and compare against the
-same oracles as their DataFrame-native twins — proving the generic API
-is capability-equivalent to the reference's, not just present.
+These queries execute real MapReduceClient jobs (core/client.py) via
+core/job.py's pipeline -- a mapInPandas map, then a hash repartition on
+the key, a sort within partitions and a key-run mapInPandas reduce -- and
+compare against the same oracles as their DataFrame-native twins —
+proving the generic API is capability-equivalent to the reference's, not
+just present.
 """
 
 from __future__ import annotations
