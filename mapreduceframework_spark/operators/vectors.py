@@ -375,20 +375,26 @@ def kmeans_lloyd(
         import pyarrow as pa
 
         c = np.asarray(cs, dtype=np.float64)  # (k, d)
+        d = len(cs[0]) if cs else 0
 
         def fn(batches):
             sums: dict[int, object] = {}
             cnts: dict[int, int] = {}
-            d = None
             for b in batches:
                 col = b.column(b.schema.get_field_index("qv"))
                 n = len(col)
                 if n == 0:
                     continue
-                flat = col.flatten().to_numpy(zero_copy_only=False)
-                if d is None:
-                    d = len(flat) // n
-                x = flat.reshape(n, d)
+                # flatten() drops null lists and reshape() checks only
+                # the total, so ragged rows would mix into wrong vectors.
+                flat = col.flatten()
+                lens = col.value_lengths().to_numpy(zero_copy_only=False)
+                if col.null_count or flat.null_count or (lens != d).any():
+                    raise ValueError(
+                        f"kmeans_lloyd: every qv must be a non-null list of "
+                        f"{d} non-null values (the centroids' length)"
+                    )
+                x = flat.to_numpy(zero_copy_only=False).reshape(n, d)
                 acc = np.zeros((n, c.shape[0]), dtype=np.float64)
                 for j in range(d):
                     diff = x[:, j : j + 1].astype(np.float64) - c[None, :, j]

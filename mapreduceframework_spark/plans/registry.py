@@ -51,6 +51,10 @@ REGISTRY: dict[str, QuerySpec] = {}
 # model-sized shuffles 32 tasks wide. Scoped per query, both families
 # get their right width. Values here are the ENGINE defaults (the
 # reset state), not tunings; cluster_conf() is unaffected.
+# Build order cannot change values: noDataMicroBatches only matters to
+# streaming rows, which run their stream to completion inside the build
+# (streaming/windows.py run_available_now); the batch knobs are read at
+# action time but only tune speed (both were A/B'd value-identical).
 _SCOPED_CONF_DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1m",
     # InferFiltersFromGenerate synthesizes size(g)>0 / isnotnull(g)
@@ -118,9 +122,10 @@ def query(
 ) -> Callable[[SparkQuery], SparkQuery]:
     """Decorator: register a Spark query under ``name``.
 
-    ``sql_conf``: runtime SQL confs pinned while this query builds and
-    executes (its action runs before the next registry query builds —
-    every harness in this repo runs registry queries sequentially).
+    ``sql_conf``: runtime SQL confs set when this query builds (other
+    _SCOPED_CONF_DEFAULTS keys reset to default). Callers may build
+    several queries before acting and still get each one's values; a
+    batch action runs under the latest build's speed knobs.
     Keys outside _SCOPED_CONF_DEFAULTS are rejected so an override
     without a reset-to-default rule cannot slip in.
     """
@@ -160,134 +165,11 @@ def query(
     return deco
 
 
-# The driver's per-round correctness run checks the FIRST 50 entries of
-# all_queries() in iteration order. Round-16 window (VERDICT r15 item
-# 1): 3 code-change sentinels lead — multimodal_decode_features and
-# multimodal_audio_decode auto-flagged (their oracle literals changed:
-# the bmp-4bit first_byte arm and the 8-bit-PCM digest arm), and
-# multimodal_image_decode flagged MANUALLY because its oracle change
-# (the PAL_CAP_4 13 -> 11 fix) rides the module-level
-# _IMG_PAL11_PIXELS constant the planner's function-granular
-# fingerprint cannot see (same row also carries the oracle-invariant
-# TIFF-LZW and P7/16-bit layout knobs). Then the ENTIRE 16-row
-# r09-stale cohort (stats_regression_multi leads, exactly as the r15
-# verdict prescribed), then the 31 stalest r10 rows in planner order
-# (tpch_q13_custdist / q16 / q20 are the displaced r10 tail and lead
-# r17's queue). 3 + 16 + 31 = 50; post-round max staleness r10.
-# LATE-r16 amendment: the sf1 scale probe caught an int64 overflow in
-# stats_chi_square_independence (row*col*N ~ 2.7e19 at sf1); its
-# double-multiply fix changes engine AND oracle, so it takes a
-# sentinel slot, displacing the planner-ordered-last r10 refresh
-# (tpch_q12_shipmode_priority, which joins the r17 queue head).
-# Registry: 277 (freeze held; zero adds this round — every r16
-# capability rides existing rows via oracle-invariant layout knobs or
-# mirrored-oracle sub-variants).
-DRIVER_WINDOW: tuple[str, ...] = (
-    # --- code-change sentinels (4): every r16 matrix change plus the
-    #     probe-caught chi-square overflow fix, all re-verified at
-    #     sf0.001/0.01/0.1 (and sf1) on landing ---
-    "multimodal_image_decode",
-    "multimodal_audio_decode",
-    "multimodal_decode_features",
-    "stats_chi_square_independence",
-    # --- the full r09-stale cohort (16), planner order ---
-    "stats_regression_multi",
-    "stats_theil_sen",
-    "stats_welch_ttest",
-    "text_bpe_tokenize",
-    "text_bpe_vocab_counts",
-    "text_keywords_rake",
-    "timeseries_autocorrelation",
-    "timeseries_cross_correlation",
-    "tpch_q2_min_cost_supplier",
-    "udf_pandas_grouped_agg",
-    "udtf_bigram_counts",
-    "udtf_native_token_runs",
-    "window_moving_avg",
-    "window_range_frame",
-    "window_running_sum",
-    "window_topk_per_group",
-    # --- stalest refresh: the oldest r10 rows (31), planner order ---
-    "agg_bitwise",
-    "ann_filtered_ivf",
-    "cdc_merge_orders",
-    "cdc_snapshot_diff",
-    "cube_counts",
-    "decontaminate_ngram_overlap",
-    "dedup_clusters",
-    "dedup_substring_chunks",
-    "embedding_quantize_int8",
-    "events_anomaly_zscore",
-    "events_funnel_conversion",
-    "feature_quantile_buckets",
-    "flatmap_posexplode",
-    "graph_degree_stats",
-    "grouping_sets_explicit",
-    "kmeans_quantized_clusters",
-    "lateral_last_ship",
-    "multimodal_frame_sample",
-    "multimodal_resize",
-    "quality_report_tables",
-    "sample_deterministic",
-    "sample_mixture_by_source",
-    "scalar_array_setops",
-    "scalar_map_funcs",
-    "sketch_bloom_probe",
-    "sketch_kmv_distinct",
-    "subquery_exists_late_ship",
-    "subquery_scalar_above_avg",
-    "text_scrub_redact",
-    "text_tfidf_top_terms",
-)
-
-# Queries with a green driver row in CORRECTNESS_r02.json or
-# CORRECTNESS_r03.json — rotated behind the round-4 window so every slot
-# verifies something new (or, for the sentinel, newly changed).
-_R02_GREEN: frozenset[str] = frozenset({
-    "events_sessionize_gaps", "events_retention_cohorts", "timeseries_ohlc",
-    "profile_numeric_histogram", "scd2_order_history", "events_anomaly_zscore",
-    "char_counts", "word_counts", "histogram_mod100", "sorted_histogram",
-    "distinct_keys_mod100", "projection", "filter_predicate",
-    "flatmap_explode_words", "agg_algebraic", "agg_full_group",
-    "agg_count_distinct", "sort_partition_local", "sort_global_ranked",
-    "topk_orders", "set_union", "set_intersect", "set_except",
-    "scalar_string_funcs", "scalar_date_funcs", "scalar_math_funcs",
-    "scalar_array_funcs", "scalar_json_funcs", "conditional_case_agg",
-    "agg_statistical", "unpivot_price_components", "set_intersect_all",
-    "set_except_all", "cube_grouping_id", "timeseries_gap_fill",
-    "join_null_safe", "agg_null_semantics", "agg_collect_sorted",
-    "agg_argmax_struct", "text_token_stats", "text_quality_scores",
-    "text_lang_id", "text_fingerprints", "dedup_exact",
-    "dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_clusters",
-    "dedup_simhash", "dedup_embedding_cosine", "ann_cosine_bruteforce",
-    # r03 greens
-    "mr_char_counts", "mr_histogram_mod100", "mr_filter_evens",
-    "join_inner", "join_left_agg", "join_full_outer", "join_semi",
-    "join_anti", "join_broadcast", "join_theta", "join_cross",
-    "join_asof", "join_asof_forward_gap", "join_range_binned",
-    "join_salted_skew", "tpch_q1_pricing", "tpch_q2_min_cost_supplier",
-    "tpch_q3_shipping", "tpch_q5_local_volume", "tpch_q6_forecast_revenue",
-    "tpch_q9_product_profit", "tpch_q18_large_orders",
-    "tpch_q21_waiting_supplier", "tpch_q22_idle_rich_customers",
-    "window_topk_per_group", "window_running_sum", "window_lag_lead",
-    "window_range_frame", "rollup_revenue", "pivot_status_by_priority",
-    "streaming_tumbling_counts", "streaming_session_counts",
-    "streaming_user_counts_stateful", "udf_pandas_scalar",
-    "udf_pandas_grouped_agg", "udtf_bigram_counts",
-    "udtf_native_token_runs", "sketch_countmin_heavy",
-    "sketch_kmv_distinct", "graph_pagerank_trade", "cdc_merge_orders",
-    "layout_zorder_clustering", "ann_cosine_lsh", "ann_cosine_ivf",
-    "embedding_quantize_int8", "kmeans_quantized_clusters",
-    "multimodal_decode_features", "text_bm25_topk",
-    "dedup_edit_distance_verify",
-})
-
-
 def all_queries() -> dict[str, QuerySpec]:
-    """Import every query module and return the full registry, ordered
-    so the driver's 50-entry correctness window lands on
-    :data:`DRIVER_WINDOW` first, then the remaining not-yet-verified
-    queries, then the queries already green in round 2."""
+    """Import every query module and return the full registry in
+    registration order (module import order below, then decorator order
+    within each module). Callers look queries up by name; none depends
+    on the order."""
     # Imports are side-effectful (decorator registration); keep the list
     # explicit so a missing module is an error, not silent shrinkage.
     from mapreduceframework_spark.plans import (  # noqa: F401
@@ -311,9 +193,4 @@ def all_queries() -> dict[str, QuerySpec]:
         window_queries,
     )
 
-    missing = [n for n in DRIVER_WINDOW if n not in REGISTRY]
-    if missing:
-        raise RuntimeError(f"DRIVER_WINDOW names not registered: {missing}")
-    rest = [n for n in REGISTRY if n not in DRIVER_WINDOW]
-    rest.sort(key=lambda n: n in _R02_GREEN)  # stable: unverified first
-    return {n: REGISTRY[n] for n in [*DRIVER_WINDOW, *rest]}
+    return dict(REGISTRY)

@@ -68,9 +68,9 @@ def assert_parity(spark_df, oracle_con, oracle_query: str) -> None:
 
 def assert_parity_frames(got_raw: pd.DataFrame, want_raw: pd.DataFrame) -> None:
     """Frame-level core of :func:`assert_parity` — callers that already
-    collected both sides (e.g. tools/check_window.py, which also runs
+    collected both sides (e.g. test_oracle_parity.py, which also runs
     the driver's bag_hash compare on the same frames) use this to avoid
-    re-executing the query and the oracle."""
+    re-executing the query and the oracle. Does not modify its inputs."""
     got = _canon(got_raw)
     want = _canon(want_raw)
     assert list(got.columns) == list(want.columns), (

@@ -6,6 +6,7 @@ adversarial inputs — ties, empty clusters — the generator may not hit).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduceframework_spark.operators import vectors as V
@@ -112,6 +113,28 @@ def test_kmeans_update_pass_matches_hof_fold(spark):
     }
     got = {(r["vec_id"], r["cid"]) for r in asg.select("vec_id", "cid").collect()}
     assert got == ref
+
+
+@pytest.mark.parametrize(
+    "bad",
+    # each total is a whole number of 2-vectors; flatten() drops a null list
+    [[(2, [5]), (3, [6, 7, 8])], [(2, None), (3, [5, 6, 7, 8])], [(2, [5, None])]],
+    ids=["ragged", "null_list", "null_element"],
+)
+def test_kmeans_update_rejects_out_of_contract_vectors(spark, bad):
+    """Rows of the wrong length or with nulls must fail the update, not
+    be reshaped into wrong vectors. One shuffle partition keeps every
+    row in one Arrow batch, whose total length alone would pass."""
+    rows = [(0, [1, 2]), (1, [3, 4]), *bad]
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        q = spark.createDataFrame(rows, "vec_id long, qv array<long>").coalesce(1)
+        with pytest.raises(Exception, match="non-null list of 2 non-null values"):
+            V.kmeans_lloyd(q, k=2, updates=1)
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_guarded_unroll_dot_matches_fold(spark):

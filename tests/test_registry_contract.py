@@ -1,12 +1,12 @@
-"""Registry / driver-contract hygiene — fast meta-checks that protect
-the round driver's assumptions without running any Spark job:
+"""Registry / driver-contract hygiene — mostly fast meta-checks that
+protect the round driver's assumptions without running any Spark job:
 
 - every oracle is parseable DuckDB SQL (EXPLAIN, not execute — catches
   syntax drift in seconds instead of the full parity run's minutes);
-- the driver window is exactly the first 50 registry entries;
 - __spark_entry__ exposes exactly the registry (the driver imports it,
   not the registry, so a drift here silently shrinks coverage);
-- naming and metadata invariants the tooling relies on.
+- naming and metadata invariants the tooling relies on;
+- per-query scoped confs, whatever order a caller builds queries in.
 """
 
 from __future__ import annotations
@@ -16,8 +16,9 @@ import re
 import duckdb
 import pytest
 
-from mapreduceframework_spark.plans.registry import DRIVER_WINDOW, all_queries
+from mapreduceframework_spark.plans.registry import all_queries
 from mapreduceframework_spark.sources.registry import TABLES
+from tests.conftest import assert_parity
 
 REG = all_queries()
 
@@ -42,12 +43,6 @@ def test_oracle_sql_parses_and_plans(lint_con, name):
     lint_con.execute(f"EXPLAIN {REG[name].oracle}")
 
 
-def test_driver_window_is_registry_prefix():
-    assert len(DRIVER_WINDOW) == 50
-    assert list(REG)[:50] == list(DRIVER_WINDOW)
-    assert len(set(DRIVER_WINDOW)) == 50
-
-
 def test_spark_entry_mirrors_registry():
     import __spark_entry__ as entry
 
@@ -65,11 +60,13 @@ def test_registry_metadata_invariants():
         assert spec.doc, f"{name} has no docstring"
 
 
-def test_scoped_sql_conf_is_pinned_per_query(spark, sf_dir):
+def test_scoped_sql_conf_is_pinned_per_query(spark, sf_dir, oracle_con):
     """r17: per-query runtime confs (the scoped AQE coalescing floor)
     must be SET when an overriding query builds and RESET to the engine
     default when any other query builds — otherwise one query's
-    toy-scale tuning leaks into every later query in the session."""
+    toy-scale tuning leaks into every later query in the session. A
+    caller that builds several queries before acting still gets each
+    one's values."""
     from mapreduceframework_spark.plans.registry import (
         _SCOPED_CONF_DEFAULTS,
     )
@@ -116,15 +113,23 @@ def test_scoped_sql_conf_is_pinned_per_query(spark, sf_dir):
     for name, spec in REG.items():
         for k in dict(spec.sql_conf):
             assert k in _SCOPED_CONF_DEFAULTS, (name, k)
-    # Build (not execute) one overriding and one plain query and watch
-    # the session conf flip both ways.
-    REG["dedup_ngram_jaccard"].fn(spark, sf_dir)
+    # Build an outer stream-stream join, one overriding and one plain
+    # batch query and a nodata-skipping stream, watching the session conf
+    # flip each way. Then collect the first two: the join (which needs the
+    # trailing no-data batch) ran inside its build, and the shingle row's
+    # confs only tune speed, so both still match their oracles.
+    join = REG["streaming_click_purchase_left_join"].fn(spark, sf_dir)
+    shingles = REG["dedup_ngram_jaccard"].fn(spark, sf_dir)
     assert spark.conf.get(key) == "64k"
     assert "InferFiltersFromGenerate" in spark.conf.get(rules)
     assert "InferFiltersFromConstraints" in spark.conf.get(rules)
     REG["word_counts"].fn(spark, sf_dir)
     assert spark.conf.get(key) == _SCOPED_CONF_DEFAULTS[key]
     assert spark.conf.get(rules) == ""
+    REG["streaming_tumbling_counts"].fn(spark, sf_dir)
+    assert spark.conf.get(nodata) == "false"
+    assert_parity(join, oracle_con, REG["streaming_click_purchase_left_join"].oracle)
+    assert_parity(shingles, oracle_con, REG["dedup_ngram_jaccard"].oracle)
 
 
 def test_every_query_has_an_oracle():
@@ -149,7 +154,6 @@ _NON_MIRROR_MODULES = {
     "test_plans.py",
     "test_registry_contract.py",
     "test_session_robustness.py",
-    "test_window_planner.py",
 }
 
 

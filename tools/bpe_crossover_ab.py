@@ -55,8 +55,8 @@ import time
 import pandas as pd
 
 # Repo root from __file__, not cwd — the tool must import the package
-# it measures regardless of where it is launched from (the
-# window_planner convention).
+# it measures regardless of where it is launched from (as
+# tools/drive_contract.py does).
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 LADDER = (48, 128, 256, 512, 1024)

@@ -10,13 +10,15 @@ from __future__ import annotations
 
 import argparse
 import hashlib
+import os
 import sys
 from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, ROOT)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -50,6 +52,12 @@ def main() -> int:
 
     import __spark_entry__ as mod
     from mapreduceframework_spark.session import get_session
+
+    # Python workers unpickle engine code, so they must import the
+    # package too, from whatever directory this is run in.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
 
     spark = get_session(app_name="drive-contract", cpus=8)
 
