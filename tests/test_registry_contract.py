@@ -60,13 +60,11 @@ def test_registry_metadata_invariants():
         assert spec.doc, f"{name} has no docstring"
 
 
-def test_scoped_sql_conf_is_pinned_per_query(spark, sf_dir, oracle_con):
+def test_scoped_sql_conf_is_pinned_per_query(spark, sf_dir):
     """r17: per-query runtime confs (the scoped AQE coalescing floor)
     must be SET when an overriding query builds and RESET to the engine
     default when any other query builds — otherwise one query's
-    toy-scale tuning leaks into every later query in the session. A
-    caller that builds several queries before acting still gets each
-    one's values."""
+    toy-scale tuning leaks into every later query in the session."""
     from mapreduceframework_spark.plans.registry import (
         _SCOPED_CONF_DEFAULTS,
     )
@@ -113,21 +111,33 @@ def test_scoped_sql_conf_is_pinned_per_query(spark, sf_dir, oracle_con):
     for name, spec in REG.items():
         for k in dict(spec.sql_conf):
             assert k in _SCOPED_CONF_DEFAULTS, (name, k)
-    # Build an outer stream-stream join, one overriding and one plain
-    # batch query and a nodata-skipping stream, watching the session conf
-    # flip each way. Then collect the first two: the join (which needs the
-    # trailing no-data batch) ran inside its build, and the shingle row's
-    # confs only tune speed, so both still match their oracles.
-    join = REG["streaming_click_purchase_left_join"].fn(spark, sf_dir)
-    shingles = REG["dedup_ngram_jaccard"].fn(spark, sf_dir)
+    # Build (not execute) one overriding and one plain query and watch
+    # the session conf flip both ways.
+    REG["dedup_ngram_jaccard"].fn(spark, sf_dir)
     assert spark.conf.get(key) == "64k"
     assert "InferFiltersFromGenerate" in spark.conf.get(rules)
     assert "InferFiltersFromConstraints" in spark.conf.get(rules)
     REG["word_counts"].fn(spark, sf_dir)
     assert spark.conf.get(key) == _SCOPED_CONF_DEFAULTS[key]
     assert spark.conf.get(rules) == ""
+
+
+def test_queries_built_before_acting_match_their_oracles(spark, sf_dir, oracle_con):
+    """A caller that builds several queries before acting still gets
+    each one's confs. Build an outer stream-stream join and an overriding
+    batch query, then a plain one and a nodata-skipping stream, so that
+    the shingle rules are reset and noDataMicroBatches is false when the
+    first two are collected. The join (which needs the trailing no-data
+    batch) ran its stream inside its build, and the shingle row's confs
+    only tune speed, so both still match their oracles."""
+    nodata = "spark.sql.streaming.noDataMicroBatches.enabled"
+    rules = "spark.sql.optimizer.excludedRules"
+    join = REG["streaming_click_purchase_left_join"].fn(spark, sf_dir)
+    shingles = REG["dedup_ngram_jaccard"].fn(spark, sf_dir)
+    REG["word_counts"].fn(spark, sf_dir)
     REG["streaming_tumbling_counts"].fn(spark, sf_dir)
     assert spark.conf.get(nodata) == "false"
+    assert spark.conf.get(rules) == ""
     assert_parity(join, oracle_con, REG["streaming_click_purchase_left_join"].oracle)
     assert_parity(shingles, oracle_con, REG["dedup_ngram_jaccard"].oracle)
 
