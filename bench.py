@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Benchmark harness — the driver runs this per-round (BENCH_r{N}.json).
+"""Benchmark harness — the 55-row headline (recorded as BENCH_r{N}.json).
 
 Runs every registry query tagged ``bench=True`` (the headline set) against
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
@@ -20,12 +20,11 @@ and the median discards it. v3 additions (r06 VERDICT items 3-4): the
 volatile dedup/ANN family (``VOLATILE``) gets two extra passes
 (median-of-5; their r06 samples swung 2-4x while TPC-H swung <2x), a
 ``clearCache()`` + JVM/Python GC barrier runs between passes so pass
-N's heap/cache residue cannot pollute pass N+1, and the stdout line is
-kept compact (samples -> BENCH_SUMMARY.json sidecar + stderr) with
-headline fields FIRST so the driver's bounded tail capture always
-contains a parseable object. Data is NOT pre-read into cache by the
-warm-up; each query still scans its sources (the OS page cache does
-warm across passes, as it would on any long-lived cluster).
+N's heap/cache residue cannot pollute pass N+1, and raw samples go to
+the BENCH_SUMMARY.json sidecar + stderr, so stdout carries one compact
+line with the headline fields first. Data is NOT pre-read into cache
+by the warm-up; each query still scans its sources (the OS page cache
+does warm across passes, as it would on any long-lived cluster).
 
 The emitted JSON carries a ``methodology`` object (version / timing /
 repeats / warmup) so cross-round tooling can detect protocol changes
@@ -42,12 +41,11 @@ without a live A/B (see BASELINE.md "BENCH HOST-CALIBRATION
 CONTROLS").
 
 Query ORDER is pinned (``BENCH_ORDER``, = BENCH_r03's list) so per-query
-timings are comparable across rounds: registry iteration order rotates
-with the driver's correctness window, and letting the bench follow it put
-a different query first each round — that query then absorbed whatever
+timings are comparable across rounds: the first query absorbs whatever
 one-time cost the warm-up missed (r03: join_range_binned 3.1s first vs
-0.58s mid-run in r02). New bench-tagged queries append after the pinned
-list, sorted by name.
+0.58s mid-run in r02), so it must be the same query every round. Every
+pinned name must be a registered ``bench=True`` query. New bench-tagged
+queries append after the pinned list, sorted by name.
 """
 
 from __future__ import annotations
@@ -94,80 +92,6 @@ BENCH_ORDER = (
 )
 
 REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
-
-# The driver records a bounded TAIL of stdout (~1.9 kB observed); the
-# one JSON line must fit it WHOLE or the round's BENCH record is an
-# unparseable fragment. Compact separators buy ~3 chars/row; past that
-# the per-query dict itself outgrows the capture (~55 rows with full
-# names), so the line degrades to deterministic short aliases — full
-# names and the alias map always live in BENCH_SUMMARY.json.
-STDOUT_LIMIT = int(os.environ.get("SPARK_GRAFT_BENCH_STDOUT_LIMIT", "1800"))
-
-
-def abbrev_names(names) -> dict[str, str]:
-    """Deterministic short alias per query name: first 3 chars of the
-    leading '_'-word + initials of the rest ('similarity_join_prefix_
-    filter' -> 'simjpf'), numeric suffix on collision in sorted-name
-    order — reproducible from the name list alone, no state."""
-    out: dict[str, str] = {}
-    taken: set[str] = set()
-    for n in sorted(names):
-        parts = n.split("_")
-        base = parts[0][:3] + "".join(p[0] for p in parts[1:] if p)
-        cand, i = base, 2
-        while cand in taken:
-            cand, i = f"{base}{i}", i + 1
-        taken.add(cand)
-        out[n] = cand
-    return out
-
-
-def stdout_payload(out: dict) -> tuple[str, dict[str, str] | None]:
-    """The single stdout line for ``out``, plus the alias map if the
-    rendering had to fall back to short names. Degradation ladder
-    (r9 VERDICT item 3 / ADVICE: every step re-checks the ceiling so
-    overflow fails loudly instead of emitting a truncated record):
-
-    1. full names, 3-decimal values — the common case; BENCH_r{N}.json
-       stays directly name- and value-comparable across rounds;
-    2. full names, 2-decimal values (marked ``"prec": 2``) — saves
-       ~1 char/row; bench noise is >> 10 ms so nothing real is lost
-       and cross-round tooling still joins on full names. This rung
-       only helps when ROW COUNT drives the overflow: the ``"prec":2``
-       key itself costs 9 chars, so a payload over the ceiling by a
-       hair with few-but-long-named rows can gain nothing here and
-       fall straight through to abbrev-v1 (each step re-checks the
-       ceiling, so that fall-through is safe, just narrower than the
-       ladder reads);
-    3. ``abbrev-v1`` aliases (+ 2-decimal) — resolve via the
-       ``stdout_name_map`` in BENCH_SUMMARY.json;
-    4. still over -> RuntimeError (a silent fragment costs the whole
-       round's BENCH record; a loud failure costs one re-run).
-    """
-    def render(d: dict) -> str:
-        return json.dumps(d, separators=(",", ":"))
-
-    line = render(out)
-    if len(line) <= STDOUT_LIMIT:
-        return line, None
-    rounded = dict(out)
-    rounded["prec"] = 2  # per-query values rounded; sidecar keeps 3-dec
-    rounded["queries"] = {k: round(v, 2) for k, v in out["queries"].items()}
-    line = render(rounded)
-    if len(line) <= STDOUT_LIMIT:
-        return line, None
-    amap = abbrev_names(out["queries"])
-    short = dict(rounded)
-    short["names"] = "abbrev-v1"  # consumer: resolve via sidecar map
-    short["queries"] = {amap[k]: v for k, v in rounded["queries"].items()}
-    line = render(short)
-    if len(line) > STDOUT_LIMIT:
-        raise RuntimeError(
-            f"bench stdout line is {len(line)} chars even after abbrev-v1 "
-            f"+ 2-decimal degradation (ceiling {STDOUT_LIMIT}); add a "
-            "further degradation step before the registry grows again"
-        )
-    return line, amap
 
 # The dedup/ANN family shows 2-4x swing across passes (r06 samples:
 # dedup_simhash [2.56, 7.30, 4.73], ann_cosine_bruteforce
@@ -263,7 +187,9 @@ def main() -> None:
 
     specs = {n: s for n, s in all_queries().items() if s.bench}
     extra = sorted(n for n in specs if n not in BENCH_ORDER)
-    ordered = [n for n in BENCH_ORDER if n in specs] + extra
+    # Index, don't filter: a renamed or untagged pinned row must fail
+    # the run instead of silently leaving the headline.
+    ordered = [specs[n].name for n in BENCH_ORDER] + extra
 
     def run_one(name: str, tag: str) -> None:
         spec = specs[name]
@@ -316,12 +242,8 @@ def main() -> None:
         pass_barrier()
 
     timings = {name: round(statistics.median(ts), 3) for name, ts in samples.items()}
-    # Field order matters: the driver captures a bounded TAIL of stdout,
-    # so the headline fields lead and the bulky per-query dict trails;
-    # the one stdout line (~1.2 kB for 36 queries) fits the capture
-    # whole. Raw samples go to the sidecar + stderr, not stdout
-    # (r06's tail truncated the headline object because samples were
-    # inlined).
+    # Headline fields lead and the bulky per-query dict trails; raw
+    # samples go to the sidecar + stderr, not stdout.
     out = {
         "metric": "headline_total",
         "value": round(sum(timings.values()), 3),
@@ -329,9 +251,7 @@ def main() -> None:
         "sf": sf,
         # stdout methodology carries only the asserted fields; the
         # static protocol descriptors (order/pass_barrier/extra
-        # -repeats) moved to the sidecar in r16 so the per-query dict
-        # keeps FULL names within the capture ceiling even with the
-        # controls object on the line.
+        # -repeats) live in the sidecar.
         "methodology": {
             "version": 3,
             "timing": "median",
@@ -344,11 +264,10 @@ def main() -> None:
         },
         "queries": timings,
     }
-    line, amap = stdout_payload(out)
     sidecar = dict(out)
-    # The volatile-row list and raw samples live in the sidecar only:
-    # the one stdout line must fit the driver's bounded tail capture
-    # whole (~1.9 kB ceiling, asserted by tests/test_bench_contract.py).
+    # The volatile-row list and raw samples live in the sidecar only,
+    # keeping the one stdout line compact (its length is asserted by
+    # tests/test_bench_contract.py).
     sidecar["methodology"] = dict(
         out["methodology"],
         extra_repeats_volatile=EXTRA_REPEATS,
@@ -362,17 +281,13 @@ def main() -> None:
     sidecar["control_samples"] = {
         c: [round(t, 3) for t in ts] for c, ts in control_samples.items()
     }
-    if amap is not None:
-        # stdout degraded to short aliases — record the resolution map
-        # (full name -> alias) beside the full-name queries dict.
-        sidecar["stdout_name_map"] = amap
     sidecar_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_SUMMARY.json"
     )
     with open(sidecar_path, "w") as f:
         json.dump(sidecar, f, indent=1)
     print(f"# samples: {json.dumps(sidecar['samples'])}", file=sys.stderr)
-    print(line)
+    print(json.dumps(out, separators=(",", ":")))
 
 
 if __name__ == "__main__":

@@ -195,10 +195,7 @@ BPE_MERGES: tuple[tuple[str, str], ...] = (
 _BPE_D = "|"
 
 
-def bpe_encode(
-    text: Column,
-    merges: tuple[tuple[str, str], ...] = BPE_MERGES,
-) -> Column:
+def bpe_encode(text: Column) -> Column:
     """Exact BPE encoding of ``text`` as a delimited unit string.
 
     Representation: every character becomes a ``|c|`` unit (so units
@@ -221,7 +218,7 @@ def bpe_encode(
     # (and RE2 skips only \n), so newline chars silently escape the
     # unit representation — and differently per engine.
     s = F.regexp_replace(s, "(?s)(.)", "|$1|")
-    for a, b in merges:
+    for a, b in BPE_MERGES:
         s = F.replace(
             s,
             F.lit(f"{_BPE_D}{a}{_BPE_D}{_BPE_D}{b}{_BPE_D}"),
@@ -288,10 +285,10 @@ def bpe_token_count_sql(expr: str) -> str:
 # the same as 48. Equivalence with the expression encoder on the
 # 48-merge table is pinned in tests/test_text_semantics.py.
 #
-# MEASURED crossover (tools/bpe_crossover_ab.py, BASELINE.md round-11
-# note): on a 20k-word vocab table the codegen encoder wins at 48
-# merges (0.48x Arrow), Arrow overtakes at ~128 merges, is 16x faster
-# by 1024 — where the expression tree also needs -Xss64m to convert at
+# MEASURED crossover (BASELINE.md, "Arrow-BPE crossover", round 11):
+# on a 20k-word vocab table the codegen encoder wins at 48 merges
+# (0.48x Arrow), Arrow overtakes at ~128 merges, is 16x faster by
+# 1024 — where the expression tree also needs -Xss64m to convert at
 # all (default driver stack overflows at M=512). Keep codegen below
 # ~100 merges; take this path for anything vocabulary-sized.
 
@@ -301,21 +298,17 @@ _BPE_RANK: dict[tuple[str, str], int] = {
 _COUNTED_WS = " \t\n\r"  # the separator class bpe_token_count subtracts
 
 
-def greedy_word_tokens(
-    word: str, rank: dict[tuple[str, str], int]
-) -> int:
-    """Token count of one letter run via min-rank greedy merging
-    against an arbitrary ``rank`` table. This is THE greedy kernel:
-    the production path wraps it with the module merge table and an
-    lru_cache (:func:`_bpe_word_tokens`); the crossover harness
-    (tools/bpe_crossover_ab.py) calls it with learned tables of other
-    sizes so the A/B always measures the shipped kernel, never a
-    drifted copy."""
+@functools.lru_cache(maxsize=65536)
+def _bpe_word_tokens(word: str) -> int:
+    """Token count of one lowercase letter run via min-rank greedy
+    merging against the module merge table. Cached: the scale path
+    feeds DISTINCT words, and raw-text callers repeat words with
+    Zipfian frequency."""
     syms = list(word)
     while len(syms) > 1:
         best_rank, best_pair = None, None
         for pair in zip(syms, syms[1:]):
-            r = rank.get(pair)
+            r = _BPE_RANK.get(pair)
             if r is not None and (best_rank is None or r < best_rank):
                 best_rank, best_pair = r, pair
         if best_pair is None:
@@ -331,15 +324,6 @@ def greedy_word_tokens(
                 i += 1
         syms = out
     return len(syms)
-
-
-@functools.lru_cache(maxsize=65536)
-def _bpe_word_tokens(word: str) -> int:
-    """Token count of one lowercase letter run via min-rank greedy
-    merging against the module merge table. Cached: the scale path
-    feeds DISTINCT words, and raw-text callers repeat words with
-    Zipfian frequency."""
-    return greedy_word_tokens(word, _BPE_RANK)
 
 
 def bpe_token_count_py(text: str) -> int:

@@ -882,9 +882,10 @@ def _sq_l2(a, b, n: int = 8) -> F.Column:
     subspaces twice + the ADC fan-out). The unrolled form is plain
     codegen arithmetic — r17 profiling had exec at 2.9 s with per-task
     CPU ~= run time on these stages. Value-identical: integer adds in
-    any association are exact, and try_element_at mirrors zip_with's
-    null for an out-of-range index (in-contract arrays are always
-    length 8 — slices of d=64 vectors / collect_list of 8 components).
+    any association are exact. In-contract arrays are always length
+    ``n`` (slices of d=64 vectors / collect_list of 8 components); a
+    NULL array gives NULL, and two non-null arrays of any other length
+    raise instead of returning NULL or dropping a tail.
     """
     terms = [
         (F.try_element_at(a, F.lit(i)) - F.try_element_at(b, F.lit(i)))
@@ -894,7 +895,10 @@ def _sq_l2(a, b, n: int = 8) -> F.Column:
     out = terms[0]
     for t in terms[1:]:
         out = out + t
-    return out
+    return F.when((F.size(a) == n) & (F.size(b) == n), out).when(
+        a.isNotNull() & b.isNotNull(),
+        F.raise_error(F.lit(f"_sq_l2: arrays must both have length {n}")),
+    )
 
 
 _PQ_SQ = "list_sum(list_transform(range(8), c -> ({a}[c+1] - {b}[c+1]) * ({a}[c+1] - {b}[c+1])))"

@@ -1490,10 +1490,10 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the assignment ONCE: it feeds three plan branches
     # (both pair-join sides + the outer keep/drop table), and without
     # the checkpoint each branch re-runs scan + quantize + the HOF
-    # argmin pass (measured 7.0 s -> 3.5 s at sf0.1, bench_ab n=7).
-    # Same lineage
-    # -truncation call the CC edge iteration uses; the checkpointed
-    # relation is O(n) slim codes, released by the context cleaner.
+    # argmin pass (measured 7.0 s -> 3.5 s at sf0.1, interleaved A/B
+    # n=7). Same lineage-truncation call the CC edge iteration uses; the
+    # checkpointed relation is O(n) slim codes, released by the context
+    # cleaner.
     scored = asg.select(
         "vec_id", "cid", "qv", n2.alias("n2")
     ).localCheckpoint(eager=True)

@@ -55,6 +55,9 @@ REGISTRY: dict[str, QuerySpec] = {}
 # streaming rows, which run their stream to completion inside the build
 # (streaming/windows.py run_available_now); the batch knobs are read at
 # action time but only tune speed (both were A/B'd value-identical).
+# That is the rule for adding a key here: the conf is pinned when a
+# query builds but read when its action runs, so a key may be added
+# only if it cannot change a batch query's result.
 _SCOPED_CONF_DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1m",
     # InferFiltersFromGenerate synthesizes size(g)>0 / isnotnull(g)
@@ -125,9 +128,11 @@ def query(
     ``sql_conf``: runtime SQL confs set when this query builds (other
     _SCOPED_CONF_DEFAULTS keys reset to default). Callers may build
     several queries before acting and still get each one's values; a
-    batch action runs under the latest build's speed knobs.
-    Keys outside _SCOPED_CONF_DEFAULTS are rejected so an override
-    without a reset-to-default rule cannot slip in.
+    batch action runs under the latest build's speed knobs, which is
+    why a key may join _SCOPED_CONF_DEFAULTS only if it cannot change a
+    batch query's result (it is pinned at build time, read at action
+    time). Keys outside _SCOPED_CONF_DEFAULTS are rejected so an
+    override without a reset-to-default rule cannot slip in.
     """
     for k in sql_conf or ():
         if k not in _SCOPED_CONF_DEFAULTS:

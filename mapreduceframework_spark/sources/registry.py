@@ -237,7 +237,7 @@ def inline_rows_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     Real in-memory data sources stay on ``sources.io.from_rows`` (the
     declared InputVec-style operator).
     """
-    fields = [f.strip().rsplit(" ", 1) for f in schema.split(",")]
+    fields = T.StructType.fromDDL(schema).fields
     # Fallbacks keep the helper total: an empty array can't be typed by
     # inline, and past ~1k rows the O(rows x cols) literal tree costs
     # Catalyst more than the Python scan it avoids (driver-collected
@@ -247,8 +247,8 @@ def inline_rows_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     structs = [
         F.struct(
             *[
-                F.lit(v).cast(t).alias(name)
-                for (name, t), v in zip(fields, row)
+                F.lit(v).cast(f.dataType).alias(f.name)
+                for f, v in zip(fields, row)
             ]
         )
         for row in rows

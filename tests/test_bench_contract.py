@@ -60,143 +60,3 @@ def test_bench_emits_single_json_line():
     assert all(
         len(v) == 1 for v in sidecar["control_samples"].values()
     )
-
-
-def test_stdout_payload_fits_capture_at_80_rows():
-    """The stdout line must fit the driver's bounded tail capture even
-    when the bench set outgrows full-name rendering (~55 rows): with a
-    synthetic 80-row queries dict the payload degrades to the
-    deterministic abbrev-v1 aliases and stays under the ceiling, and
-    the alias map losslessly recovers every full name."""
-    import bench
-
-    queries = {
-        f"synthetic_query_family_{i:02d}_with_a_long_name": round(
-            0.123 + i * 0.017, 3
-        )
-        for i in range(80)
-    }
-    out = {
-        "metric": "headline_total",
-        "value": round(sum(queries.values()), 3),
-        "unit": "sec",
-        "sf": 0.1,
-        "methodology": {
-            "version": 3,
-            "timing": "median",
-            "repeats": 3,
-            "extra_repeats_volatile": 2,
-            "warmup": True,
-            "order": "pinned-r03",
-            "pass_barrier": "clearCache+gc",
-        },
-        "queries": queries,
-    }
-    line, amap = bench.stdout_payload(out)
-    assert len(line) < 1900, len(line)
-    payload = json.loads(line)
-    assert payload["names"] == "abbrev-v1"
-    assert payload["prec"] == 2  # alias step implies the rounding step
-    assert amap is not None and len(amap) == 80
-    # Alias map is a bijection and recovers the original dict exactly
-    # (values at the degraded 2-decimal precision).
-    assert len(set(amap.values())) == len(amap)
-    recovered = {
-        full: payload["queries"][short] for full, short in amap.items()
-    }
-    assert recovered == {k: round(v, 2) for k, v in queries.items()}
-    assert payload["value"] == out["value"]
-
-
-def test_stdout_payload_rounds_before_abbreviating():
-    """Just past the ceiling, the payload keeps FULL names and only
-    rounds values to 2 decimals — cross-round tooling joins on names
-    without touching the sidecar map (r9 VERDICT item 3)."""
-    import bench
-
-    # 55 rows of 20-char names render to 1817 chars with 3-dec values
-    # (> the 1800 ceiling) but the 46 non-integral rows' 2-dec rounding
-    # brings the line back to 1771 — full names survive.
-    queries = {
-        ("f" + str(i).zfill(2)).ljust(20, "x"): round(1.234 + i * 0.017, 3)
-        for i in range(55)
-    }
-    out = {
-        "metric": "headline_total",
-        "value": round(sum(queries.values()), 3),
-        "unit": "sec",
-        "sf": 0.1,
-        "methodology": {
-            "version": 3,
-            "timing": "median",
-            "repeats": 3,
-            "extra_repeats_volatile": 2,
-            "warmup": True,
-            "order": "pinned-r03",
-            "pass_barrier": "clearCache+gc",
-        },
-        "queries": queries,
-    }
-    full_line = bench.json.dumps(out, separators=(",", ":"))
-    assert len(full_line) > bench.STDOUT_LIMIT  # premise: 3-dec overflows
-    line, amap = bench.stdout_payload(out)
-    assert amap is None  # full names survived
-    assert len(line) <= bench.STDOUT_LIMIT
-    payload = bench.json.loads(line)
-    assert payload["prec"] == 2
-    assert payload["queries"] == {k: round(v, 2) for k, v in queries.items()}
-
-
-def test_stdout_payload_overflow_fails_loudly():
-    """If even abbrev-v1 + 2-decimal rounding cannot fit the capture,
-    stdout_payload must raise, not emit a truncated fragment."""
-    import pytest
-
-    import bench
-
-    queries = {f"q_{i:04d}": 0.1 for i in range(400)}
-    out = {
-        "metric": "headline_total",
-        "value": 40.0,
-        "unit": "sec",
-        "sf": 0.1,
-        "methodology": {"version": 3},
-        "queries": queries,
-    }
-    with pytest.raises(RuntimeError, match="degradation"):
-        bench.stdout_payload(out)
-
-
-def test_stdout_payload_keeps_full_names_when_they_fit():
-    """Under the ceiling nothing degrades: full names, no alias map —
-    BENCH_r{N}.json stays directly comparable across rounds."""
-    import bench
-
-    out = {
-        "metric": "headline_total",
-        "value": 1.0,
-        "unit": "sec",
-        "sf": 0.1,
-        "methodology": {"version": 3},
-        "queries": {"tpch_q1_pricing": 0.5, "char_counts": 0.5},
-    }
-    line, amap = bench.stdout_payload(out)
-    assert amap is None
-    assert json.loads(line)["queries"] == out["queries"]
-    assert "names" not in json.loads(line)
-
-
-def test_abbrev_names_deterministic_and_injective():
-    import bench
-
-    names = [
-        "similarity_join_prefix_filter",
-        "similarity_join_pf",  # engineered near-collision
-        "sim_j_p_f",
-        "tpch_q1_pricing",
-        "char_counts",
-    ]
-    a1 = bench.abbrev_names(names)
-    a2 = bench.abbrev_names(list(reversed(names)))
-    assert a1 == a2  # order-insensitive (sorted internally)
-    assert len(set(a1.values())) == len(names)

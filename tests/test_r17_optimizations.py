@@ -137,6 +137,24 @@ def test_kmeans_update_rejects_out_of_contract_vectors(spark, bad):
         spark.conf.set(key, old)
 
 
+def test_sq_l2_rejects_out_of_contract_lengths(spark):
+    """The unrolled PQ distance covers exactly 8 components: a length-8
+    pair gives the exact integer, a NULL array gives NULL, and a 7- or
+    9-long pair must raise instead of returning NULL or dropping a tail."""
+    from mapreduceframework_spark.plans.ann_queries import _sq_l2
+
+    def sq(a, b):
+        df = spark.createDataFrame([(a, b)], "a array<long>, b array<long>")
+        return df.select(_sq_l2(F.col("a"), F.col("b")).alias("d")).first()["d"]
+
+    a8, b8 = list(range(8)), [3 * i - 5 for i in range(8)]
+    assert sq(a8, b8) == sum((x - y) ** 2 for x, y in zip(a8, b8))
+    assert sq(None, b8) is None
+    for n in (7, 9):
+        with pytest.raises(Exception, match="must both have length 8"):
+            sq(list(range(n)), list(range(n)))
+
+
 def test_guarded_unroll_dot_matches_fold(spark):
     """The r17 unrolled dot/dot_ll fast paths must be bit-identical to
     the HOF folds they replace — including signed zeros, nulls, and
@@ -233,3 +251,18 @@ def test_inline_rows_df_values_and_plan(spark):
     assert inline_rows_df(spark, [], schema).count() == 0
     big = [(i, "x", i) for i in range(1001)]
     assert inline_rows_df(spark, big, schema).count() == 1001
+
+
+def test_inline_rows_df_parses_parameterized_types(spark):
+    """The schema is DDL: a comma inside ``decimal(10,2)`` is part of
+    the type, not a field separator."""
+    from decimal import Decimal
+
+    from mapreduceframework_spark.sources.registry import inline_rows_df
+
+    rows = [(1, Decimal("1.25"))]
+    schema = "id long, d decimal(10,2)"
+    a = inline_rows_df(spark, rows, schema)
+    b = spark.createDataFrame(rows, schema)
+    assert a.schema.simpleString() == b.schema.simpleString()
+    assert a.collect() == b.collect()

@@ -60,6 +60,17 @@ def test_registry_metadata_invariants():
         assert spec.doc, f"{name} has no docstring"
 
 
+def test_tooling_names_are_registered():
+    """bench.py's pinned rows and plan_report's showcase look queries
+    up by name; a rename or a dropped ``bench`` tag must fail here, not
+    at the end of a bench run."""
+    from bench import BENCH_ORDER
+    from tools.plan_report import SHOWCASE
+
+    assert [n for n in BENCH_ORDER if n not in REG or not REG[n].bench] == []
+    assert [n for n, _claim in SHOWCASE if n not in REG] == []
+
+
 def test_scoped_sql_conf_is_pinned_per_query(spark, sf_dir):
     """r17: per-query runtime confs (the scoped AQE coalescing floor)
     must be SET when an overriding query builds and RESET to the engine
