@@ -156,6 +156,16 @@ def control_workloads(spark) -> dict:
     }
 
 
+def bench_order(queries: dict) -> list[str]:
+    """Run order of the ``bench=True`` rows of ``queries``: the pinned
+    ``BENCH_ORDER``, then every other bench row sorted by name. Index,
+    don't filter: a renamed or untagged pinned row raises ``KeyError``
+    instead of silently leaving the headline."""
+    specs = {n: s for n, s in queries.items() if s.bench}
+    extra = sorted(n for n in specs if n not in BENCH_ORDER)
+    return [specs[n].name for n in BENCH_ORDER] + extra
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -185,11 +195,8 @@ def main() -> None:
     region = load_table(spark, sf_dir, "region")
     nation.join(region.hint("broadcast"), nation.n_regionkey == region.r_regionkey).count()
 
-    specs = {n: s for n, s in all_queries().items() if s.bench}
-    extra = sorted(n for n in specs if n not in BENCH_ORDER)
-    # Index, don't filter: a renamed or untagged pinned row must fail
-    # the run instead of silently leaving the headline.
-    ordered = [specs[n].name for n in BENCH_ORDER] + extra
+    specs = all_queries()
+    ordered = bench_order(specs)
 
     def run_one(name: str, tag: str) -> None:
         spec = specs[name]

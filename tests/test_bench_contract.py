@@ -2,6 +2,7 @@
 line with the agreed keys. A broken bench costs a whole round's
 BENCH_r{N}.json record, so this is tested like any other interface.
 Runs at sf0.001 in a subprocess (fresh interpreter, like the driver).
+The run-order tests are Spark-free and use stand-in registries.
 """
 
 from __future__ import annotations
@@ -10,6 +11,41 @@ import json
 import os
 import subprocess
 import sys
+from types import SimpleNamespace
+
+import pytest
+
+from bench import BENCH_ORDER, bench_order
+
+
+def _registry(**overrides):
+    """Stand-in registry: every pinned row as a bench row, plus two
+    unpinned bench rows and one non-bench row; ``overrides`` replaces
+    (or, with None, drops) entries by name."""
+    names = {n: True for n in BENCH_ORDER}
+    names.update(zz_extra=True, aa_extra=True, not_bench=False)
+    names.update(overrides)
+    return {
+        n: SimpleNamespace(name=n, bench=b)
+        for n, b in names.items()
+        if b is not None
+    }
+
+
+def test_bench_order_pins_rows_then_sorts_extras():
+    assert bench_order(_registry()) == [
+        *BENCH_ORDER, "aa_extra", "zz_extra"
+    ]
+
+
+def test_bench_order_rejects_a_renamed_pinned_row():
+    with pytest.raises(KeyError, match=BENCH_ORDER[3]):
+        bench_order(_registry(**{BENCH_ORDER[3]: None}))
+
+
+def test_bench_order_rejects_an_untagged_pinned_row():
+    with pytest.raises(KeyError, match=BENCH_ORDER[-1]):
+        bench_order(_registry(**{BENCH_ORDER[-1]: False}))
 
 
 def test_bench_emits_single_json_line():
