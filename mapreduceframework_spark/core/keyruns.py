@@ -1,8 +1,7 @@
 """Complete-key-run batching over key-sorted Arrow batch streams.
 
-Shared by core/job.py's reduce stage and operators/joins.py's as-of
-join (round-14 review item): both walk mapInPandas batch iterators
-whose rows are key-sorted within the partition and must hand
+Used by operators/joins.py's as-of joins, which walk mapInPandas batch
+iterators whose rows are key-sorted within the partition and must hand
 downstream logic only COMPLETE key runs — a key's rows may straddle
 Arrow batch boundaries, so each batch's trailing run is buffered
 until the key changes.
@@ -10,7 +9,7 @@ until the key changes.
 The buffer is a LIST of frames, appended per batch and concatenated
 once when the run completes — never re-concatenated per batch — so a
 hot key with K rows across m batches costs O(K), not the O(K^2/B) of
-the naive concat-carry (the skew hazard both call sites' 100 TB
+the naive concat-carry (the skew hazard the call sites' 100 TB
 framing warns about).
 """
 

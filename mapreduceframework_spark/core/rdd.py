@@ -13,7 +13,7 @@ materializes every group in one task exactly the way the reference
 materializes per-key IntermediateVecs in RAM (JobContext.h:80) — faithful,
 but the 100 TB-safe route is core/job.py's DataFrame pipeline
 (Arrow-batched map, hash repartition on the key + sort within
-partitions, key-run mapInPandas reduce) or, better, algebraic built-ins.
+partitions, key-run mapInArrow reduce) or, better, algebraic built-ins.
 Kept because (a) it IS the reference's semantics with no batching
 asterisks, and (b) opaque non-SQL key/value types
 (arbitrary picklable Python objects) work here and nowhere else.

@@ -45,8 +45,8 @@ def asof_join(
     but made one Python roundtrip per key (measured ~8x this join's
     whole runtime at per-user cardinality; a per-key-RPC hazard at
     100 TB). A key's rows can straddle two Arrow batches, so complete
-    runs are re-assembled by core/keyruns.iter_key_runs — the same
-    helper as core/job.py's reduce stage (hot-key O(K) buffering).
+    runs are re-assembled by core/keyruns.iter_key_runs (hot-key O(K)
+    buffering).
     Skew story unchanged: one co-partitioned shuffle, and a hot key
     can be pre-split by bucketing ``left_ts`` coarsely into the key.
 

@@ -10,7 +10,7 @@ bucketed tables (shuffle-free co-located joins) — through the full
 write -> read-back -> value-hash-oracle loop the driver grades.
 
 Scratch location: everything lands under the session temp dir (same
-policy as session.py's per-pid warehouse), never inside the repo or
+policy as session.py's per-process warehouse), never inside the repo or
 the read-only testdata.
 """
 

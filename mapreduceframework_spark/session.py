@@ -16,16 +16,29 @@ testing but every knob is chosen for cluster-scale behavior:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
-# saveAsTable (bucketed tables etc.) writes under the warehouse dir;
-# keep it out of the repo working tree.
-_WAREHOUSE = os.path.join(tempfile.gettempdir(), f"mrf-warehouse-{os.getpid()}")
+_warehouse: str | None = None
+
+
+def warehouse_dir() -> str:
+    """This process's warehouse: saveAsTable (bucketed tables etc.)
+    writes under it, out of the repo working tree. A fresh directory
+    per process, removed when the process exits: a name derived from
+    the pid alone outlived its process, and a later process given the
+    same pid then failed saveAsTable with LOCATION_ALREADY_EXISTS."""
+    global _warehouse
+    if _warehouse is None:
+        _warehouse = tempfile.mkdtemp(prefix="mrf-warehouse-")
+        atexit.register(shutil.rmtree, _warehouse, ignore_errors=True)
+    return _warehouse
 
 
 def get_session(
@@ -80,7 +93,7 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.warehouse.dir", _WAREHOUSE)
+        .config("spark.sql.warehouse.dir", warehouse_dir())
         # The driver compares against DuckDB; ANSI mode (Spark 4 default)
         # stays ON — engine code uses try_* / explicit casts where needed.
     )

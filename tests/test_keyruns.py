@@ -1,6 +1,6 @@
 """Unit tests for core/keyruns.iter_key_runs — the complete-key-run
-batcher shared by the MapReduce reduce stage and the as-of join
-(round-14). Pure pandas; no Spark session needed."""
+batcher of the as-of joins (operators/joins.py). Pure pandas; no Spark
+session needed."""
 
 from __future__ import annotations
 

@@ -4,8 +4,12 @@ and the job lifecycle/progress contract."""
 
 from __future__ import annotations
 
+import datetime
 import time
+from decimal import Decimal
 
+import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from mapreduceframework_spark.core import (
@@ -136,6 +140,73 @@ def test_job_error_surfaces_as_exception(spark, sf_dir):
     except Exception:
         raised = True
     assert raised
+
+
+def make_identity_client(value_type: str, bad: tuple | None = None) -> MapReduceClient:
+    """Passes each (key, value) record through map and reduce unchanged.
+    ``bad`` = (stage, value) makes that stage emit ``value`` as the key
+    instead."""
+
+    class Identity(MapReduceClient):
+        intermediate_schema = f"k long, v {value_type}"
+        output_schema = f"k long, v {value_type}"
+
+        def map(self, key, value):
+            yield (bad[1] if bad and bad[0] == "map" else key), value
+
+        def reduce(self, key, values):
+            for v in values:
+                yield (bad[1] if bad and bad[0] == "reduce" else key), v
+
+    return Identity()
+
+
+TYPED_VALUES = {
+    "long": [7, -(2**63), 2**63 - 1],
+    "double": [1.5, float("nan"), -0.0],
+    "string": ["a", "", "\u00e9\u4e2d"],
+    "boolean": [True, False, True],
+    "date": [datetime.date(2020, 1, 2), datetime.date(1970, 1, 1),
+             datetime.date(1, 1, 1)],
+    "timestamp": [datetime.datetime(2020, 1, 2, 3, 4, 5, 6),
+                  datetime.datetime(1999, 12, 31, 23, 59, 59),
+                  datetime.datetime(1970, 1, 1)],
+    "decimal(10,2)": [Decimal("1.50"), Decimal("-3.07"), Decimal("99999999.99")],
+    "binary": [b"\x00x", b"", bytes(range(256))],
+}
+
+
+@pytest.mark.parametrize("value_type", list(TYPED_VALUES))
+def test_job_result_equals_collect(spark, value_type):
+    """Job.result() (gathered through Arrow where the type allows) gives
+    what result_df.collect() gives: the same values, Python types and
+    __fields__ — and the values that went in, NULL included."""
+    values = [*TYPED_VALUES[value_type], None]
+    df = spark.createDataFrame(list(enumerate(values)), f"k long, v {value_type}")
+    job = start_map_reduce_job(spark, make_identity_client(value_type), df)
+    got = sorted(job.result(), key=lambda r: r["k"])
+    want = sorted(job.result_df.collect(), key=lambda r: r["k"])
+    job.close()
+
+    def shape(rows):
+        return [(repr(r), [type(x) for x in r], r.__fields__) for r in rows]
+
+    assert all(isinstance(r, Row) for r in got)
+    assert shape(got) == shape(want)
+    assert shape(got) == shape(sorted(df.collect(), key=lambda r: r["k"]))
+
+
+@pytest.mark.parametrize(
+    "bad", [("map", "x"), ("map", True), ("reduce", True)],
+    ids=["str-map", "bool-map", "bool-reduce"],
+)
+def test_wrong_python_type_into_long_column_raises(spark, bad):
+    """A str or a bool emitted into a long column fails the job; it is
+    never coerced (bool would otherwise become 0/1)."""
+    df = spark.createDataFrame([(1, 1), (2, 2)], "k long, v long")
+    job = start_map_reduce_job(spark, make_identity_client("long", bad), df)
+    with pytest.raises(Exception, match="got bool|with type str"):
+        job.wait()
 
 
 def test_rdd_path_matches_dataframe_path(spark, sf_dir):

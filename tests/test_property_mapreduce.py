@@ -2,16 +2,17 @@
 
 The reference's entire correctness story is two golden client programs
 (SURVEY.md §5); this upgrades it: for RANDOM inputs and a client whose
-map emits 0..2 pairs per record, the Spark pipeline (mapInPandas ->
-groupBy.applyInPandas, core/job.py) and the literal RDD path
-(core/rdd.py) must both equal a naive in-Python mapreduce executed from
-the same client object. That pins the contract itself — emit2 0..n
-times, reduce sees all values of exactly one key, output is an
-unordered bag — not just two fixed examples.
+map emits 0..2 pairs per record, the Spark pipeline (mapInArrow map ->
+hash repartition + sort -> key-run mapInArrow reduce, core/job.py) and
+the literal RDD path (core/rdd.py) must both equal a naive in-Python
+mapreduce executed from the same client object. That pins the contract
+itself — emit2 0..n times, reduce sees all values of exactly one key,
+output is an unordered bag — not just two fixed examples.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 from typing import Any
 
@@ -69,7 +70,13 @@ def naive_mapreduce(
     out: list[tuple[Any, ...]] = []
     for k2, vals in groups.items():
         out.extend(client.reduce(k2, vals))
-    return sorted(out)
+    return out
+
+
+def bag(rows) -> list[str]:
+    """Rows as an unordered bag: sorted reprs, so NaN equals NaN and
+    None sorts beside numbers."""
+    return sorted(repr(tuple(r)) for r in rows)
 
 
 @pytest.mark.parametrize("runner", [run_job, run_job_rdd], ids=["df", "rdd"])
@@ -94,8 +101,61 @@ def test_generic_client_matches_naive(spark, runner, values, modulus):
         got_df = runner(spark, client, df)
     else:
         got_df = runner(client, df)
-    got = sorted(tuple(r) for r in got_df.collect())
-    assert got == want
+    assert bag(got_df.collect()) == bag(want)
+
+
+def make_null_nan_client(key_type: str) -> MapReduceClient:
+    """Map sends every third value to the NULL key and, for double
+    keys, every third to NaN; the rest spread over 4 keys. Reduce
+    emits each key's count and sum, so a key reduced twice shows up as
+    two partial rows."""
+    cast = float if key_type == "double" else int
+
+    class NullNanKeys(MapReduceClient):
+        intermediate_schema = f"k2 {key_type}, v2 long"
+        output_schema = f"k2 {key_type}, n long, total long"
+
+        def map(self, key: Any, value: Any) -> Iterator[tuple[Any, int]]:
+            if value % 3 == 0:
+                yield None, value
+            elif value % 3 == 1 and key_type == "double":
+                # One NaN object, so naive_mapreduce's dict groups it.
+                yield math.nan, value
+            else:
+                yield cast(value % 4), value
+
+        def reduce(self, key: Any, values: list[Any]) -> Iterator[tuple]:
+            yield key, len(values), sum(values)
+
+    return NullNanKeys()
+
+
+@pytest.mark.parametrize("key_type", ["long", "double"])
+def test_null_and_nan_keys_reduce_once(spark, key_type):
+    """NULL is one key (the reference's NULL K2*), and so is NaN: each
+    reaches client.reduce once, with all of its values."""
+    client = make_null_nan_client(key_type)
+    pairs = [(i, i) for i in range(60)]
+    df = spark.createDataFrame(pairs, "key long, value long")
+    got = run_job(spark, client, df).collect()
+    assert bag(got) == bag(naive_mapreduce(client, pairs))
+
+
+def test_key_runs_straddling_arrow_batches_reduce_once(spark):
+    """With 7-record Arrow batches each key's sorted run (NULL and NaN
+    runs included) spans many batches; the reduce walk must carry the
+    open run across them and reduce every key once."""
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    client = make_null_nan_client("double")
+    pairs = [(i, i) for i in range(300)]
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        df = spark.createDataFrame(pairs, "key long, value long")
+        got = run_job(spark, client, df).collect()
+    finally:
+        spark.conf.set(conf, old)
+    assert bag(got) == bag(naive_mapreduce(client, pairs))
 
 
 def test_banded_rep_pairs_invariants(spark):

@@ -72,3 +72,32 @@ def test_aqe_splits_skewed_join_partition(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_warehouse_is_per_process_and_removed_at_exit():
+    """Each process gets its own warehouse directory, removed when the
+    process exits. A directory named after the pid alone outlived its
+    process, and a later process given the same pid then failed
+    saveAsTable with LOCATION_ALREADY_EXISTS."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os\n"
+        "from mapreduceframework_spark.session import warehouse_dir\n"
+        "d = warehouse_dir()\n"
+        "os.makedirs(os.path.join(d, 'mrf_b_orders'))\n"
+        "print(d)\n"
+    )
+    env = dict(os.environ, PYTHONPATH=root)
+    dirs = [
+        subprocess.run(
+            [sys.executable, "-c", code], env=env, capture_output=True,
+            text=True, check=True,
+        ).stdout.strip()
+        for _ in range(2)
+    ]
+    assert all(dirs) and dirs[0] != dirs[1]
+    assert not any(os.path.exists(d) for d in dirs)

@@ -59,7 +59,11 @@ def main() -> int:
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
     )
 
-    spark = get_session(app_name="drive-contract", cpus=8)
+    # Progress bars would share stdout lines with the OK records.
+    spark = get_session(
+        app_name="drive-contract", cpus=8,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
 
     df = mod.entry(spark)
     n = df.count()
