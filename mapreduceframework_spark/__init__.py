@@ -12,8 +12,9 @@ lifecycle/progress API (SURVEY.md section 2). This package provides:
   ``__spark_entry__.py``, the pytest parity harness, and ``bench.py``.
 - ``core``: the generic MapReduceClient API (map/emit2/reduce/emit3 and
   JobHandle/getJobState semantics, reference MapReduceFramework.h:15-24),
-  made idiomatic: a mapInArrow map, a hash repartition + sort + key-run
-  mapInArrow reduce, an Arrow gather, and statusTracker progress.
+  made idiomatic: a mapInArrow map with an optional per-batch combiner,
+  a hash repartition + sort + key-run mapInArrow reduce, an Arrow
+  gather, and statusTracker progress.
 - ``operators``: dedup / similarity / text / multimodal extension operators
   designed for 100 TB scale.
 - ``streaming``: Structured Streaming surface over the events table.

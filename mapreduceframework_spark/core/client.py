@@ -18,7 +18,8 @@ reference's order-equivalence rule ``!(a<b) && !(b<a)``
 from __future__ import annotations
 
 from abc import ABC, abstractmethod
-from collections.abc import Iterable, Iterator
+from collections import Counter
+from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
 
@@ -30,12 +31,23 @@ class MapReduceClient(ABC):
     field is the shuffle key. ``output_schema`` is the reduce output row.
     The instance is pickled into executor tasks — keep it stateless (the
     reference's clients are too: all state flows through emit).
+
+    ``combine`` is an optional map-side combiner, Hadoop's contract
+    (the reference has none): ``combine(key, values)`` receives some of
+    one key's intermediate values and yields (k2, v2) pairs of the
+    intermediate schema under that same key. ``reduce`` must give the
+    same result whether ``combine`` ran 0, 1 or many times, over any
+    split of a key's values — an associative, commutative sum is the
+    usual shape. core/job.py runs it once per key per map-side Arrow
+    batch; core/rdd.py never runs it.
     """
 
     #: shuffle key + value, e.g. "ch string, n long"
     intermediate_schema: str = "k2 string, v2 long"
     #: reduce output, e.g. "ch string, total long"
     output_schema: str = "k3 string, v3 long"
+    #: optional map-side combiner, see the class docstring
+    combine: Callable[[Any, list[Any]], Iterator[tuple[Any, Any]]] | None = None
 
     @abstractmethod
     def map(self, key: Any, value: Any) -> Iterator[tuple[Any, Any]]:
@@ -51,16 +63,17 @@ class MapReduceClient(ABC):
 class CharCountClient(MapReduceClient):
     """The reference's SampleClient (SampleClient.cpp:32-66): map emits a
     per-document character histogram (user-level map-side combine),
-    reduce sums counts per character."""
+    reduce sums counts per character, and the same sum combines each
+    map batch's counts across its documents."""
 
     intermediate_schema = "ch string, n long"
     output_schema = "ch string, cnt long"
 
     def map(self, key: Any, value: str) -> Iterator[tuple[str, int]]:
-        counts: dict[str, int] = {}
-        for c in value or "":
-            counts[c] = counts.get(c, 0) + 1
-        yield from counts.items()
+        yield from Counter(value or "").items()
+
+    def combine(self, key: str, values: list[int]) -> Iterator[tuple[str, int]]:
+        yield key, sum(values)
 
     def reduce(self, key: str, values: list[int]) -> Iterator[tuple[str, int]]:
         yield key, sum(values)
@@ -69,7 +82,8 @@ class CharCountClient(MapReduceClient):
 class ModuloHistogramClient(MapReduceClient):
     """The reference's golden-test client
     (test1-1_thread_1_process.cpp:59-77): map emits (k % 100, 1), reduce
-    emits the group size."""
+    emits the group size — the sum of the ones, so that partial counts
+    combined on the map side add up to the same size."""
 
     intermediate_schema = "key long, one long"
     output_schema = "key long, cnt long"
@@ -77,13 +91,17 @@ class ModuloHistogramClient(MapReduceClient):
     def map(self, key: Any, value: int) -> Iterator[tuple[int, int]]:
         yield int(value) % 100, 1
 
+    def combine(self, key: int, values: list[int]) -> Iterator[tuple[int, int]]:
+        yield key, sum(values)
+
     def reduce(self, key: int, values: list[int]) -> Iterator[tuple[int, int]]:
-        yield key, len(values)
+        yield key, sum(values)
 
 
 class FilterEvensClient(MapReduceClient):
     """Emit-zero-shaped client (contract allows 0 emissions,
-    MapReduceClient.h:58): keeps odd values only, identity reduce."""
+    MapReduceClient.h:58): keeps odd values only, identity reduce. Its
+    keys are distinct, so a combiner would have nothing to merge."""
 
     intermediate_schema = "k long, v long"
     output_schema = "k long, v long"

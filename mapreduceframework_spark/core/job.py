@@ -20,8 +20,12 @@ by JobHandle, MapReduceFramework.cpp:11).
 The dataflow itself is two Arrow-batched Python stages, no pandas:
 - MAP: ``mapInArrow`` — each batch's columns become Python lists that
   walk through ``client.map`` (emit2 == yield); the pairs go back as
-  one Arrow batch of the intermediate schema's types. Per-record
-  Python is the contract here; engineered queries use JVM built-ins.
+  one Arrow batch of the intermediate schema's types. When the client
+  has a ``combine``, each key's pairs in the batch pass through it
+  first (a map-side combiner, Hadoop's contract), so a sum-shaped job
+  shuffles one pair per key per batch, not one per emission.
+  Per-record Python is the contract here; engineered queries use JVM
+  built-ins.
 - SHUFFLE+REDUCE: hash-repartition on k2 + sort within partitions +
   one ``mapInArrow`` walk over the sorted key runs (r14) — Spark's
   hash shuffle replaces the sort-based single-threaded shuffle, and
@@ -42,6 +46,7 @@ from __future__ import annotations
 import gc
 import threading
 import uuid
+from collections import defaultdict
 from dataclasses import dataclass
 from enum import IntEnum
 from itertools import repeat
@@ -127,11 +132,25 @@ def _to_list(col: pa.Array) -> list:
     return col.to_pylist()
 
 
+def _to_array(values: list, t: pa.DataType) -> pa.Array:
+    """Python values as an Arrow array of type ``t``. A value of the
+    wrong type (a str, bool or float into a long column) raises instead
+    of being coerced. ``pa.array(values, type=int64)`` raises for str
+    and bool but truncates a float (1.5 becomes 1), so integer columns
+    infer first and then cast, which also raises on overflow into a
+    narrower int."""
+    if not pa.types.is_integer(t):
+        return pa.array(values, type=t)
+    arr = pa.array(values)
+    if pa.types.is_integer(arr.type) or pa.types.is_null(arr.type):
+        return arr.cast(t)
+    pa.array(values, type=t)  # pyarrow's own error for a str or bool
+    raise TypeError(f"Expected integer, got {arr.type} for an {t} column")
+
+
 def _to_batch(columns: list[list], schema: pa.Schema) -> pa.RecordBatch:
-    """Python value columns as a batch of ``schema``'s Arrow types. A
-    value of the wrong type (a str or bool into a long column) raises
-    instead of being coerced."""
-    arrays = [pa.array(c, type=f.type) for c, f in zip(columns, schema, strict=True)]
+    """Python value columns as a batch of ``schema``'s Arrow types."""
+    arrays = [_to_array(c, f.type) for c, f in zip(columns, schema, strict=True)]
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
@@ -140,19 +159,41 @@ def _rows_batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:
     return _to_batch(list(zip(*rows, strict=True)), schema)
 
 
+def _combined(combine: Any, keys: list, values: list) -> tuple[list, list]:
+    """``combine(key, values)`` once per distinct key, in first-seen key
+    order and with each key's values in emission order; the emitted
+    pairs as key and value columns."""
+    groups: defaultdict[Any, list] = defaultdict(list)
+    for k, v in zip(keys, values):
+        groups[k].append(v)
+    out_k, out_v = [], []
+    for k, vs in groups.items():
+        for k2, v2 in combine(k, vs):
+            out_k.append(k2)
+            out_v.append(v2)
+    return out_k, out_v
+
+
 def _map_stage_df(client: MapReduceClient, df: DataFrame) -> DataFrame:
     """Map phase: ``client.map(key, value)`` once per input record,
     every emitted (k2, v2) pair collected into one Arrow batch per
-    input batch."""
+    input batch. When the client has a ``combine``, it runs once per
+    distinct key of the batch's pairs; grouping one batch at a time
+    keeps its memory bounded by the batch."""
     schema = to_arrow_schema(StructType.fromDDL(client.intermediate_schema))
+    combine = client.combine
 
     def run_map(batches):
         for batch in batches:
+            # Two flat columns, not a list of pair tuples: 75k retained
+            # tuples set off garbage collections that doubled the loop.
             out_k, out_v = [], []
             for k, v in zip(_to_list(batch.column(0)), _to_list(batch.column(1))):
                 for k2, v2 in client.map(k, v):
                     out_k.append(k2)
                     out_v.append(v2)
+            if combine is not None:
+                out_k, out_v = _combined(combine, out_k, out_v)
             yield _to_batch([out_k, out_v], schema)
 
     return df.mapInArrow(run_map, schema=client.intermediate_schema)

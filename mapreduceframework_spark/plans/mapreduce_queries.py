@@ -1,8 +1,9 @@
 """The generic MapReduce client API run through the correctness gate.
 
 These queries execute real MapReduceClient jobs (core/client.py) via
-core/job.py's pipeline -- a mapInArrow map, then a hash repartition on
-the key, a sort within partitions and a key-run mapInArrow reduce -- and
+core/job.py's pipeline -- a mapInArrow map (combined per batch when the
+client has a combiner), then a hash repartition on the key, a sort
+within partitions and a key-run mapInArrow reduce -- and
 compare against the same oracles as their DataFrame-native twins —
 proving the generic API is capability-equivalent to the reference's, not
 just present.

@@ -9,31 +9,32 @@ at 100 TB — hive-partitioned parquet (partition pruning on read) and
 bucketed tables (shuffle-free co-located joins) — through the full
 write -> read-back -> value-hash-oracle loop the driver grades.
 
-Scratch location: everything lands under the session temp dir (same
-policy as session.py's per-process warehouse), never inside the repo or
-the read-only testdata.
+Scratch location: everything lands under this process's scratch
+directory (``session.process_dir``, like the warehouse: a fresh temp
+directory removed at exit), never inside the repo or the read-only
+testdata.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduceframework_spark.plans.exact import snap_units, snap_units_sql
 from mapreduceframework_spark.plans.registry import query
+from mapreduceframework_spark.session import process_dir
 from mapreduceframework_spark.sources import load_table
 from mapreduceframework_spark.sources.io import write_table
 
 
 def _scratch(sf_dir: str, name: str) -> str:
-    """Per-pid scratch dir (parallel runs never collide; overwrite mode
-    makes reruns within a session idempotent)."""
+    """A sink's output dir under this process's scratch directory
+    (parallel runs never collide, and the directory is removed at exit;
+    overwrite mode makes reruns within a session idempotent)."""
     return os.path.join(
-        tempfile.gettempdir(),
-        f"mrf-scratch-{os.getpid()}",
+        process_dir("mrf-scratch-"),
         f"{name}-{os.path.basename(sf_dir.rstrip('/'))}",
     )
 

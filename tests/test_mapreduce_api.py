@@ -197,15 +197,17 @@ def test_job_result_equals_collect(spark, value_type):
 
 
 @pytest.mark.parametrize(
-    "bad", [("map", "x"), ("map", True), ("reduce", True)],
-    ids=["str-map", "bool-map", "bool-reduce"],
+    "bad",
+    [("map", "x"), ("map", True), ("reduce", True), ("map", 1.5), ("reduce", 2.0)],
+    ids=["str-map", "bool-map", "bool-reduce", "float-map", "float-reduce"],
 )
 def test_wrong_python_type_into_long_column_raises(spark, bad):
-    """A str or a bool emitted into a long column fails the job; it is
-    never coerced (bool would otherwise become 0/1)."""
+    """A str, bool or float emitted into a long column fails the job;
+    it is never coerced (bool would otherwise become 0/1, and a float
+    would be truncated: 1.5 to 1)."""
     df = spark.createDataFrame([(1, 1), (2, 2)], "k long, v long")
     job = start_map_reduce_job(spark, make_identity_client("long", bad), df)
-    with pytest.raises(Exception, match="got bool|with type str"):
+    with pytest.raises(Exception, match="got bool|with type str|got double"):
         job.wait()
 
 

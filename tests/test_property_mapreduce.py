@@ -7,7 +7,10 @@ hash repartition + sort -> key-run mapInArrow reduce, core/job.py) and
 the literal RDD path (core/rdd.py) must both equal a naive in-Python
 mapreduce executed from the same client object. That pins the contract
 itself — emit2 0..n times, reduce sees all values of exactly one key,
-output is an unordered bag — not just two fixed examples.
+output is an unordered bag — not just two fixed examples. A client's
+optional map-side ``combine`` must not change that bag: core/job.py
+runs it once per key per Arrow batch, core/rdd.py and the naive
+mapreduce never run it.
 """
 
 from __future__ import annotations
@@ -16,12 +19,13 @@ import math
 from collections.abc import Iterator
 from typing import Any
 
+import pyarrow as pa
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from mapreduceframework_spark.core.client import MapReduceClient
-from mapreduceframework_spark.core.job import run_job
+from mapreduceframework_spark.core.job import _map_stage_df, run_job
 from mapreduceframework_spark.core.rdd import run_job_rdd
 
 
@@ -104,11 +108,96 @@ def test_generic_client_matches_naive(spark, runner, values, modulus):
     assert bag(got_df.collect()) == bag(want)
 
 
-def make_null_nan_client(key_type: str) -> MapReduceClient:
+def make_summing_client(modulus: int, combine: bool) -> MapReduceClient:
+    """Map: route each value to bucket v % m, and count even values in a
+    shifted bucket (1-to-many emit2). Reduce sums each bucket, and with
+    ``combine`` the same sum is its map-side combiner."""
+
+    class Summing(MapReduceClient):
+        intermediate_schema = "k2 long, v2 long"
+        output_schema = "k2 long, total long"
+
+        def __init__(self, m: int) -> None:
+            self.m = m
+
+        def map(self, key: Any, value: Any) -> Iterator[tuple[int, int]]:
+            yield value % self.m, value
+            if value % 2 == 0:
+                yield (value % self.m) + 1000, 1
+
+        def reduce(self, key: Any, values: list[Any]) -> Iterator[tuple[int, int]]:
+            yield key, sum(values)
+
+    if not combine:
+        return Summing(modulus)
+
+    class CombinedSumming(Summing):
+        def combine(self, key: Any, values: list[Any]) -> Iterator[tuple[int, int]]:
+            yield key, sum(values)
+
+    return CombinedSumming(modulus)
+
+
+@pytest.mark.parametrize("combine", [False, True], ids=["plain", "combine"])
+@pytest.mark.parametrize("runner", [run_job, run_job_rdd], ids=["df", "rdd"])
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[
+        HealthCheck.function_scoped_fixture,
+        HealthCheck.too_slow,
+    ],
+)
+@given(
+    values=st.lists(st.integers(min_value=0, max_value=100_000), max_size=80),
+    modulus=st.integers(min_value=1, max_value=7),
+)
+def test_combiner_does_not_change_the_result(spark, runner, combine, values, modulus):
+    client = make_summing_client(modulus, combine)
+    pairs = [(i, v) for i, v in enumerate(values)]
+    df = spark.createDataFrame(pairs or [], "key long, value long")
+    if runner is run_job:
+        got_df = runner(spark, client, df)
+    else:
+        got_df = runner(client, df)
+    assert bag(got_df.collect()) == bag(naive_mapreduce(client, pairs))
+
+
+def test_combiner_over_many_small_batches(spark):
+    """With 7-record Arrow batches every key is combined in many
+    batches, and its partial sums still reduce to the naive total."""
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    client = make_summing_client(5, combine=True)
+    pairs = [(i, i * 7 % 1000) for i in range(300)]
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        df = spark.createDataFrame(pairs, "key long, value long")
+        got = run_job(spark, client, df).collect()
+    finally:
+        spark.conf.set(conf, old)
+    assert bag(got) == bag(naive_mapreduce(client, pairs))
+
+
+def test_combiner_shuffles_at_most_one_pair_per_key_per_batch(spark):
+    """White box: with a one-pair combiner the map stage emits at most
+    batches x distinct keys pairs, not one pair per emission."""
+    client = make_summing_client(3, combine=True)
+    df = spark.createDataFrame([(i, i) for i in range(300)], "key long, value long")
+    batches = df.mapInArrow(
+        lambda it: (pa.RecordBatch.from_pydict({"n": [1]}) for _ in it), "n long"
+    ).count()
+    emitted = sum(len(list(client.map(i, i))) for i in range(300))
+    pairs = _map_stage_df(client, df).count()
+    assert pairs <= batches * 6 < emitted  # keys 0-2 and 1000-1002
+
+
+def make_null_nan_client(key_type: str, combine: bool = False) -> MapReduceClient:
     """Map sends every third value to the NULL key and, for double
     keys, every third to NaN; the rest spread over 4 keys. Reduce
     emits each key's count and sum, so a key reduced twice shows up as
-    two partial rows."""
+    two partial rows. With ``combine``, reduce and its combiner emit
+    each key's sum."""
     cast = float if key_type == "double" else int
 
     class NullNanKeys(MapReduceClient):
@@ -127,14 +216,31 @@ def make_null_nan_client(key_type: str) -> MapReduceClient:
         def reduce(self, key: Any, values: list[Any]) -> Iterator[tuple]:
             yield key, len(values), sum(values)
 
-    return NullNanKeys()
+    if not combine:
+        return NullNanKeys()
+
+    class CombinedNullNanKeys(NullNanKeys):
+        output_schema = f"k2 {key_type}, total long"
+
+        def combine(self, key: Any, values: list[Any]) -> Iterator[tuple]:
+            yield key, sum(values)
+
+        def reduce(self, key: Any, values: list[Any]) -> Iterator[tuple]:
+            yield key, sum(values)
+
+    return CombinedNullNanKeys()
 
 
-@pytest.mark.parametrize("key_type", ["long", "double"])
-def test_null_and_nan_keys_reduce_once(spark, key_type):
+@pytest.mark.parametrize(
+    "key_type, combine",
+    [("long", False), ("double", False), ("long", True), ("double", True)],
+    ids=["long", "double", "long-combine", "double-combine"],
+)
+def test_null_and_nan_keys_reduce_once(spark, key_type, combine):
     """NULL is one key (the reference's NULL K2*), and so is NaN: each
-    reaches client.reduce once, with all of its values."""
-    client = make_null_nan_client(key_type)
+    reaches client.reduce once, with all of its values — their partial
+    sums from the map side, when the client has a combiner."""
+    client = make_null_nan_client(key_type, combine)
     pairs = [(i, i) for i in range(60)]
     df = spark.createDataFrame(pairs, "key long, value long")
     got = run_job(spark, client, df).collect()
